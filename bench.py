@@ -1,6 +1,7 @@
 """Benchmark runner (SURVEY.md §6): headline queries at
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
-local[$SPARK_GRAFT_CPUS]; prints ONE JSON line.
+local[$SPARK_GRAFT_CPUS] (default: the cores this process may run
+on); prints ONE JSON line.
 
 Execution is forced with the noop sink (full plan runs, nothing is
 collected to the driver). Methodology (round 6): each query gets TWO
@@ -57,7 +58,7 @@ HEADLINE = [
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    from etl_framework_spark.session import get_spark
+    from etl_framework_spark.session import default_cpus, get_spark
     import __spark_entry__ as ent
 
     spark = get_spark("bench")
@@ -115,7 +116,7 @@ def main() -> None:
                 # contract legibility (VERDICT r11 item 2): echo the env
                 # the run actually used so a reader of the JSON line can
                 # key scaling comparisons on the recorded core count
-                "cpus": int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
+                "cpus": default_cpus(),
                 "sf_dir": sf_dir,
             }
         )

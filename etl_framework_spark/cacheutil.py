@@ -19,11 +19,19 @@ calls vector_q helpers, each of which calls prep() again), so an
 entry-point drain would unpersist the outer query's live caches
 mid-flight and silently recompute them. Releasing is the caller's
 loop boundary, not the callee's entry.
+
+A persist whose lifetime is one call, like the validate-step inputs
+``Pipeline.run`` caches, goes through ``persist_scope`` instead: the
+``with`` block that made it releases it, so it never reaches the
+registry.
 """
 
 from __future__ import annotations
 
-from typing import Any
+from contextlib import contextmanager
+from typing import Any, Callable, Iterator
+
+from pyspark import StorageLevel
 
 _TRACKED: list[Any] = []
 
@@ -37,6 +45,32 @@ def persist_tracked(df):
     df.persist()
     _TRACKED.append(df)
     return df
+
+
+@contextmanager
+def persist_scope() -> Iterator[Callable]:
+    """Persists owned by one ``with`` block: yields ``persist(df)``,
+    and every DataFrame it persisted is unpersisted when the block
+    exits, by return or by exception. Not registered with
+    ``release_tracked`` (the block already releases them). A frame
+    whose plan is already cached is left to its owner: it is neither
+    persisted again nor released."""
+    held: list = []
+
+    def persist(df):
+        if df.storageLevel == StorageLevel.NONE:
+            df.persist()
+            held.append(df)
+        return df
+
+    try:
+        yield persist
+    finally:
+        for df in held:
+            try:
+                df.unpersist(False)
+            except Exception:  # session stopped
+                pass
 
 
 def tracked_count() -> int:

@@ -10,6 +10,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_framework_spark.sources.readers import read_parquet
+
 TABLES = [
     "region",
     "nation",
@@ -39,11 +41,11 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # reads as TimestampType directly and skips the bigint branch.
         # SURVEY.md §5.3 rule 4.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(f"{sf_dir}/events.parquet")
+        df = read_parquet(spark, f"{sf_dir}/events.parquet")
         if dict(df.dtypes).get("ts") == "bigint":
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
         return df
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return read_parquet(spark, f"{sf_dir}/{name}.parquet")
 
 
 def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -23,11 +23,13 @@ expression strings compiled by Catalyst — no Python row code.
 
 from __future__ import annotations
 
+import re
 from typing import Any, Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_framework_spark.cacheutil import persist_scope
 from etl_framework_spark.sources import read_source, write_sink
 
 OpFn = Callable[..., DataFrame]
@@ -306,7 +308,15 @@ def _validate_step(df: DataFrame, checks: list[dict[str, Any]]) -> DataFrame:
     folded into ONE aggregate pass over the relation — a 100 TB
     validation costs one scan, not one per check. Passing returns the
     input unchanged (pass-through step); any failure raises
-    ValidationError naming every failed check.
+    ValidationError naming every failed check, before any sink writes.
+
+    The step's input is computed once. When a later action of the same
+    run reads it again (a writing sink, a later validate step or a
+    materialize write downstream), ``Pipeline.run`` persists the input
+    before the check, so the aggregate fills the cache and that action
+    reads it; the persist is released when the run returns or raises.
+    When only view sinks, or nothing, read the result, the check is a
+    single aggregate over the uncached input.
 
     Check shapes:
       {"type": "row_count", "min": 1, "max": null}
@@ -346,6 +356,15 @@ def _repartition(df: DataFrame, num: int | None = None, by: list[str] | None = N
     if cols:
         return df.repartition(*cols)
     return df.repartition(num)
+
+
+def _step_reads(step: dict[str, Any]) -> set[str]:
+    """Lower-cased names of the relations a step may read. A SQL step
+    reads views by name, so every identifier in its text counts."""
+    if "sql" in step:
+        return set(re.findall(r"[a-z_][a-z_0-9]*", step["sql"].lower()))
+    names = (step.get("input"), step.get("args", {}).get("right"))
+    return {n.lower() for n in names if isinstance(n, str)}
 
 
 class Pipeline:
@@ -428,54 +447,86 @@ class Pipeline:
                     "validation never fires — use a 'validate' step instead"
                 )
 
+    def _reread_after(self, i: int) -> bool:
+        """Whether an action after validate step ``i`` reads the step's
+        input again: its own or a later materialize write, a later
+        validate step, or a writing (non-view) sink, over a relation
+        derived from that input. Plain steps are lazy, not actions, and
+        the consumers of a materialized step read its parquet copy,
+        not its lineage."""
+        steps = self.spec.get("steps", [])
+        if steps[i].get("materialize"):
+            return True
+        live = {steps[i]["input"].lower()}
+        for j, step in enumerate(steps):
+            if j != i and not _step_reads(step) & live:
+                continue
+            if j > i and (step.get("op") == "validate" or step.get("materialize")):
+                return True
+            if not step.get("materialize"):
+                live.add(step["name"].lower())
+        return any(
+            s.get("format", "parquet") != "view" and s["input"].lower() in live
+            for s in self.spec.get("sinks", [])
+        )
+
     def run(self, spark: SparkSession) -> dict[str, DataFrame]:
         """Materialize sources, apply steps in order, run sinks.
-        Returns every named relation (lazy DataFrames)."""
-        rel: dict[str, DataFrame] = {}
-        for name, src in self.spec.get("sources", {}).items():
-            df = read_source(spark, src)
-            df.createOrReplaceTempView(name)
-            rel[name] = df
-        for step in self.spec.get("steps", []):
-            if "sql" in step:
-                out = spark.sql(step["sql"])
-            else:
-                args = dict(step.get("args", {}))
-                if "right" in args:
-                    args["right"] = rel[args["right"]]
-                out = OPS[step["op"]](rel[step["input"]], **args)
-            mat = step.get("materialize")
-            if mat:
-                # checkpoint the step to parquet and re-read: cuts the
-                # lineage (a later step failure resumes from here, and a
-                # reused intermediate is computed once, not per consumer)
-                out.write.mode("overwrite").parquet(mat)
-                out = spark.read.parquet(mat)
-            out.createOrReplaceTempView(step["name"])
-            rel[step["name"]] = out
-        for sink in self.spec.get("sinks", []):
-            df = rel[sink["input"]]
-            checks = sink.get("validate")
-            obs = None
-            if checks:
-                # zero-extra-scan validation: metrics are computed BY
-                # the sink write itself (df.observe), so a 100 TB load
-                # is validated without a second pass over the data.
-                from pyspark.sql import Observation
+        Returns every named relation (lazy DataFrames). Persists made
+        for validate steps are released when it returns or raises."""
+        with persist_scope() as persist:
+            rel: dict[str, DataFrame] = {}
+            for name, src in self.spec.get("sources", {}).items():
+                df = read_source(spark, src)
+                df.createOrReplaceTempView(name)
+                rel[name] = df
+            for i, step in enumerate(self.spec.get("steps", [])):
+                if "sql" in step:
+                    out = spark.sql(step["sql"])
+                else:
+                    args = dict(step.get("args", {}))
+                    if "right" in args:
+                        args["right"] = rel[args["right"]]
+                    df = rel[step["input"]]
+                    if step["op"] == "validate" and self._reread_after(i):
+                        # the check aggregate fills the cache and every
+                        # later action reads it: the input is computed once
+                        df = persist(df)
+                    out = OPS[step["op"]](df, **args)
+                mat = step.get("materialize")
+                if mat:
+                    # checkpoint the step to parquet and re-read: cuts the
+                    # lineage (a later step failure resumes from here, and a
+                    # reused intermediate is computed once, not per consumer).
+                    # The re-read takes the schema just written, so it runs
+                    # no schema-inference job.
+                    out.write.mode("overwrite").parquet(mat)
+                    out = spark.read.schema(out.schema).parquet(mat)
+                out.createOrReplaceTempView(step["name"])
+                rel[step["name"]] = out
+            for sink in self.spec.get("sinks", []):
+                df = rel[sink["input"]]
+                checks = sink.get("validate")
+                obs = None
+                if checks:
+                    # zero-extra-scan validation: metrics are computed BY
+                    # the sink write itself (df.observe), so a 100 TB load
+                    # is validated without a second pass over the data.
+                    from pyspark.sql import Observation
 
-                obs = Observation(f"validate_{sink['input']}")
-                df = df.observe(obs, *_check_aggs(checks, allow_distinct=False))
-            write_sink(
-                df,
-                {k: v for k, v in sink.items() if k not in ("input", "validate")},
-            )
-            if obs is not None:
-                failures = _check_failures(obs.get, checks)
-                if failures:
-                    raise ValidationError(
-                        f"sink {sink['input']!r}: " + "; ".join(failures)
-                    )
-        return rel
+                    obs = Observation(f"validate_{sink['input']}")
+                    df = df.observe(obs, *_check_aggs(checks, allow_distinct=False))
+                write_sink(
+                    df,
+                    {k: v for k, v in sink.items() if k not in ("input", "validate")},
+                )
+                if obs is not None:
+                    failures = _check_failures(obs.get, checks)
+                    if failures:
+                        raise ValidationError(
+                            f"sink {sink['input']!r}: " + "; ".join(failures)
+                        )
+            return rel
 
 
 def substitute_params(spec: Any, params: dict[str, Any]) -> Any:

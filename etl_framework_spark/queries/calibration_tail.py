@@ -224,9 +224,11 @@ def _peel_sql() -> str:
     return sql + " " + " UNION ALL ".join(parts)
 
 
-_PEEL_COLLECT_CAP = 2_000_000  # ~32 MB of (u, v) longs — the driver
-# bound for the in-process peel; larger edge sets take the
-# distributed fallback
+_PEEL_COLLECT_CAP = 2_000_000  # the driver bound for the in-process
+# peel; larger edge sets take the distributed fallback. At the cap the
+# Arrow transfer is ~32 MB (two int64 columns), but the Python edge
+# list the peel walks costs ~128 B per edge (a tuple and two ints):
+# ~256 MB, plus the per-round node set and degree dict
 
 
 def _peel_in_process(edges: list) -> list[tuple]:
@@ -290,11 +292,13 @@ def graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("c") > F.col("t"))
         .select("u", "v")
         .limit(_PEEL_COLLECT_CAP + 1)
-        .collect()
+        .toArrow()
     )
-    if len(edge_rows) <= _PEEL_COLLECT_CAP:
+    if edge_rows.num_rows <= _PEEL_COLLECT_CAP:
         w0.unpersist()
-        edge_list = [(r["u"], r["v"]) for r in edge_rows]
+        edge_list = list(
+            zip(edge_rows.column("u").to_pylist(), edge_rows.column("v").to_pylist())
+        )
         out_rows = _peel_in_process(edge_list)
         return spark.createDataFrame(
             out_rows,

@@ -14,17 +14,34 @@ from pyspark.sql import SparkSession
 _TUNED: set[int] = set()
 
 
+def default_cpus() -> int:
+    """Cores for ``local[n]``: ``$SPARK_GRAFT_CPUS``, else the cores
+    this process may run on."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+
+def default_driver_mem() -> str:
+    """Driver heap: ``$SPARK_DRIVER_MEM``, else a quarter of physical
+    RAM (at least 1 GiB, at most 24 GiB), so the heap, Python workers
+    and the OS page cache share one machine without swapping."""
+    env = os.environ.get("SPARK_DRIVER_MEM")
+    if env:
+        return env
+    total_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"{max(1024, min(24 * 1024, total_mb // 4))}m"
+
+
 def get_spark(app_name: str = "etl-framework-spark") -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = default_cpus()
     spark = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(max(8, int(cpus))))
+        .config("spark.sql.shuffle.partitions", str(max(8, cpus)))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", default_driver_mem())
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .getOrCreate()

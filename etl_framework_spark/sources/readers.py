@@ -18,12 +18,100 @@ JDBC servers remain untested in this environment (SURVEY.md §7).
 
 from __future__ import annotations
 
+import os
+import stat
+import threading
+from collections import OrderedDict
 from typing import Any
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 _FILE_FORMATS = {"parquet", "csv", "json", "orc"}
+
+# ---------------------------------------------------------------------------
+# Parquet schema memo.
+#
+# Without a schema, spark.read.parquet(file) runs schema inference
+# through SchemaMergeUtils.mergeSchemasInParallel, which always submits
+# a Spark job — ~85-120 ms warm on Spark 4.1 (4-vCPU VM) against
+# ~10-18 ms when the schema is supplied. A config job reads the same source files run
+# after run, so the inferred StructType of a regular local file is
+# memoized under everything that decides it: the file version (real
+# path, inode, size, mtime_ns), the reader options, and the session
+# confs that change how parquet types map to Spark types. Directories,
+# globs and non-local URIs are inferred every time: their file set can
+# change without any one stat() noticing.
+# ---------------------------------------------------------------------------
+
+_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.caseSensitive",
+)
+_SCHEMA_MEMO_SIZE = 256
+_SCHEMA_MEMO: OrderedDict[tuple, StructType] = OrderedDict()
+_SCHEMA_LOCK = threading.Lock()
+
+
+def _parquet_schema_key(
+    spark: SparkSession, path: Any, options: dict[str, Any]
+) -> tuple | None:
+    """Memo key of a parquet read, or None when the path is not one
+    regular local file."""
+    if not isinstance(path, str) or any(c in path for c in "*?[{"):
+        return None
+    url = urlparse(path)
+    if url.scheme == "file":
+        local = url.path
+    elif url.scheme == "":
+        local = path
+    else:
+        return None
+    try:
+        st = os.stat(local)
+    except OSError:
+        return None
+    if not stat.S_ISREG(st.st_mode):
+        return None
+    return (
+        os.path.realpath(local),
+        st.st_ino,
+        st.st_size,
+        st.st_mtime_ns,
+        tuple(sorted((str(k), str(v)) for k, v in options.items())),
+        tuple(spark.conf.get(k) for k in _SCHEMA_CONFS),
+    )
+
+
+def read_parquet(
+    spark: SparkSession, path: Any, options: dict[str, Any] | None = None
+) -> DataFrame:
+    """``spark.read.options(**options).parquet(path)``, with the schema
+    of a regular local file inferred once per file version (see the
+    memo above) and supplied to the reader on later reads."""
+    options = options or {}
+    reader = spark.read.options(**options)
+    key = _parquet_schema_key(spark, path, options)
+    if key is None:
+        return reader.parquet(path)
+    with _SCHEMA_LOCK:
+        schema = _SCHEMA_MEMO.get(key)
+        if schema is not None:
+            _SCHEMA_MEMO.move_to_end(key)
+    if schema is not None:
+        return reader.schema(schema).parquet(path)
+    df = reader.parquet(path)
+    with _SCHEMA_LOCK:
+        _SCHEMA_MEMO[key] = df.schema
+        while len(_SCHEMA_MEMO) > _SCHEMA_MEMO_SIZE:
+            _SCHEMA_MEMO.popitem(last=False)
+    return df
+
 
 # ---------------------------------------------------------------------------
 # Kafka (Structured Streaming's canonical message-bus source/sink).
@@ -233,6 +321,8 @@ def read_source(spark: SparkSession, spec: dict[str, Any]) -> DataFrame:
         raise ValueError(f"unsupported source format {fmt!r}")
     if "path" not in spec:
         raise ValueError(f"{fmt} source needs 'path'")
+    if fmt == "parquet" and not spec.get("stream") and not spec.get("schema"):
+        return read_parquet(spark, spec["path"], options)
     reader = spark.readStream if spec.get("stream") else spark.read
     if spec.get("schema"):
         reader = reader.schema(spec["schema"])

@@ -77,3 +77,22 @@ def test_no_bare_persist_in_package() -> None:
             if re.search(r"\.persist\(", line) and "persist_tracked" not in line:
                 offenders.append(f"{py}:{i}: {line.strip()}")
     assert not offenders, "bare persist() outside cacheutil:\n" + "\n".join(offenders)
+
+
+def test_persist_scope_releases_only_what_it_persisted(spark):
+    """persist_scope unpersists its own frames on exit, even on an
+    exception; a plan its caller had already cached stays cached."""
+    cacheutil.release_all(spark)
+    owned = spark.range(30)
+    theirs = spark.range(40).transform(cacheutil.persist_tracked)
+    try:
+        with cacheutil.persist_scope() as persist:
+            assert persist(owned).storageLevel != StorageLevel.NONE
+            persist(theirs)
+            raise RuntimeError("boom")
+    except RuntimeError:
+        pass
+    assert owned.storageLevel == StorageLevel.NONE
+    assert theirs.storageLevel != StorageLevel.NONE
+    assert cacheutil.tracked_count() == 1
+    cacheutil.release_all(spark)

@@ -623,3 +623,125 @@ def test_spec_parameter_substitution(spark):
     assert rel2["big"].count() <= got
     with pytest.raises(ValueError, match="unknown pipeline parameter"):
         substitute_params({"x": "${params.nope}"}, {})
+
+
+def _counted_validate_spec(src: str, out: str, min_rows: int = 1) -> dict:
+    """A Python UDF upstream of a validate step whose output a parquet
+    sink writes; the checks read the UDF column, so an uncached input
+    evaluates the UDF once for the check and again for the sink."""
+    return {
+        "sources": {"src": {"format": "parquet", "path": src}},
+        "steps": [
+            {"name": "scored", "input": "src", "op": "with_columns",
+             "args": {"columns": {"v": "counted_id(id)"}}},
+            {"name": "checked", "input": "scored", "op": "validate",
+             "args": {"checks": [
+                 {"type": "row_count", "min": min_rows},
+                 {"type": "not_null", "columns": ["v"]},
+             ]}},
+        ],
+        "sinks": [{"input": "checked", "format": "parquet", "path": out}],
+    }
+
+
+def _register_counted_udf(spark):
+    acc = spark.sparkContext.accumulator(0)
+
+    def counted(x):
+        acc.add(1)
+        return x
+
+    spark.udf.register("counted_id", counted, "long")
+    return acc
+
+
+def test_validate_step_input_computed_once_for_writing_sink(spark, tmp_path):
+    """The check aggregate and the parquet sink share one computation
+    of the validate step's input: the upstream UDF runs once per row."""
+    src = str(tmp_path / "src")
+    spark.range(300).write.parquet(src)
+    acc = _register_counted_udf(spark)
+    out = str(tmp_path / "out")
+    Pipeline(_counted_validate_spec(src, out)).run(spark)
+    assert acc.value == 300
+    assert spark.read.parquet(out).count() == 300
+
+
+def test_validate_step_persist_released_on_success_and_failure(spark, tmp_path):
+    """Every persist the run makes is gone when it returns or raises,
+    and none of them lands in the tracked-persist registry. A failing
+    validate step raises before any sink writes."""
+    from etl_framework_spark import cacheutil
+    from etl_framework_spark.pipeline import ValidationError
+
+    src = str(tmp_path / "src")
+    spark.range(100).write.parquet(src)
+    _register_counted_udf(spark)
+    cacheutil.release_all(spark)
+    tracked = cacheutil.tracked_count()
+
+    ok = _counted_validate_spec(src, str(tmp_path / "ok"))
+    Pipeline(ok).run(spark)
+    assert len(spark.sparkContext._jsc.getPersistentRDDs()) == 0
+    assert cacheutil.tracked_count() == tracked
+
+    bad_out = str(tmp_path / "bad")
+    with pytest.raises(ValidationError, match="row_count"):
+        Pipeline(_counted_validate_spec(src, bad_out, min_rows=1000)).run(spark)
+    assert len(spark.sparkContext._jsc.getPersistentRDDs()) == 0
+    assert cacheutil.tracked_count() == tracked
+    assert not os.path.exists(bad_out)
+
+
+def _shape(steps: list, sinks: list) -> Pipeline:
+    return Pipeline({"sources": {"a": {"format": "parquet", "path": "/x"}},
+                     "steps": steps, "sinks": sinks})
+
+
+_V = {"name": "v", "input": "a", "op": "validate", "args": {"checks": []}}
+_ORDER = {"name": "o", "input": "v", "op": "order_by", "args": {"exprs": ["id"]}}
+
+
+@pytest.mark.parametrize(
+    "steps, sinks, want",
+    [
+        # only a view sink, or nothing, reads the result: no persist
+        ([_V, _ORDER], [{"input": "o", "format": "view", "name": "x"}], False),
+        ([_V], [], False),
+        # a writing sink downstream (default format is parquet)
+        ([_V, _ORDER], [{"input": "o", "path": "/out"}], True),
+        # a writing sink over the validate step's own input
+        ([_V], [{"input": "a", "format": "json", "path": "/out"}], True),
+        # a later validate step, through a SQL step that reads the view
+        ([_V, {"name": "s", "sql": "SELECT * FROM V"},
+          {"name": "w", "input": "s", "op": "validate", "args": {"checks": []}}], [], True),
+        # a materialize write downstream, or on the step itself
+        ([_V, {**_ORDER, "materialize": "/m"}], [], True),
+        ([{**_V, "materialize": "/m"}], [], True),
+        # a writing sink that reads only an unrelated relation
+        ([_V, {"name": "s", "sql": "SELECT 1 AS one"}], [{"input": "s", "path": "/out"}], False),
+        # consumers of a materialized copy read its parquet, not the input
+        ([{"name": "m", "input": "a", "op": "filter", "args": {"condition": "true"},
+           "materialize": "/m"}, {**_V, "input": "a"},
+          {"name": "t", "input": "m", "op": "distinct", "args": {}}],
+         [{"input": "t", "path": "/out"}], False),
+    ],
+)
+def test_validate_persist_only_when_a_later_action_rereads(steps, sinks, want):
+    i = next(j for j, s in enumerate(steps) if s["name"] == "v")
+    assert _shape(steps, sinks)._reread_after(i) is want
+
+
+def test_materialize_reread_schema_matches_inference(spark, tmp_path):
+    """The materialize re-read supplies the written frame's schema; it
+    must equal what parquet inference gives for the same files."""
+    mat = str(tmp_path / "mat")
+    sql = """SELECT CAST(id AS BIGINT) a, CAST(id AS DECIMAL(12,3)) b,
+        TIMESTAMP'2024-01-01 00:00:00' c, TIMESTAMP_NTZ'2024-01-01 00:00:00' d,
+        array(id, id) e, map('k', id) f, named_struct('x', id, 'y', 'z') g,
+        CAST(id AS TINYINT) h, DATE'2024-01-02' i, CAST('ab' AS BINARY) j,
+        CAST('ab' AS CHAR(5)) k, CAST('ab' AS VARCHAR(7)) l, count(*) OVER () n
+        FROM range(5)"""
+    rel = Pipeline({"sources": {}, "steps": [{"name": "t", "sql": sql, "materialize": mat}]}).run(spark)
+    assert rel["t"].schema == spark.read.parquet(mat).schema
+    assert rel["t"].count() == 5

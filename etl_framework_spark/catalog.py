@@ -9,6 +9,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType, TimestampNTZType, TimestampType
 
 from etl_framework_spark.sources.readers import read_parquet
 
@@ -30,21 +31,37 @@ TABLES = [
 BROADCAST_DIMS = {"region", "nation"}
 
 
+def events(spark: SparkSession, sf_dir: str, stream: bool = False) -> DataFrame:
+    """The events table, batch or (``stream``) as a parquet file stream.
+
+    events.ts physical type varies by testdata generation:
+    TIMESTAMP(NANOS) — which Spark rejects (PARQUET_TYPE_ILLEGAL)
+    unless read as epoch-long and integer-divided to µs (a double cast
+    would lose precision above 2^53 ns) — or plain µs, which reads as a
+    timestamp directly. SURVEY.md §5.3 rule 4. The stream reads with
+    the batch read's schema, except that a µs ts streams as TIMESTAMP,
+    not the TIMESTAMP_NTZ the batch read infers: watermarks need it."""
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    df = read_parquet(spark, f"{sf_dir}/events.parquet")
+    if stream:
+        schema = StructType([
+            StructField(f.name, TimestampType(), f.nullable)
+            if f.name == "ts" and isinstance(f.dataType, TimestampNTZType) else f
+            for f in df.schema
+        ])
+        # The file stream source requires a directory or glob (a bare
+        # file path fails with "Option 'basePath' must be a directory").
+        df = spark.readStream.schema(schema).format("parquet").load(f"{sf_dir}/events.*")
+    if dict(df.dtypes).get("ts") == "bigint":
+        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
+    return df
+
+
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
     if name == "events":
-        # events.ts physical type varies by testdata generation:
-        # TIMESTAMP(NANOS) — which Spark rejects (PARQUET_TYPE_ILLEGAL)
-        # unless read as epoch-long and integer-divided to µs (a double
-        # cast would lose precision above 2^53 ns) — or plain µs, which
-        # reads as TimestampType directly and skips the bigint branch.
-        # SURVEY.md §5.3 rule 4.
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = read_parquet(spark, f"{sf_dir}/events.parquet")
-        if dict(df.dtypes).get("ts") == "bigint":
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
-        return df
+        return events(spark, sf_dir)
     return read_parquet(spark, f"{sf_dir}/{name}.parquet")
 
 

@@ -26,11 +26,12 @@ from __future__ import annotations
 import re
 from typing import Any, Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_framework_spark.cacheutil import persist_scope
 from etl_framework_spark.sources import read_source, write_sink
+from etl_framework_spark.sources.readers import check_spec
 
 OpFn = Callable[..., DataFrame]
 OPS: dict[str, OpFn] = {}
@@ -71,8 +72,11 @@ def _select(df: DataFrame, exprs: list[str]) -> DataFrame:
     return df.selectExpr(*exprs)
 
 
+@op("window")
 @op("with_columns")
 def _with_columns(df: DataFrame, columns: dict[str, str]) -> DataFrame:
+    """Columns as SQL expression strings; under ``window`` they are
+    window exprs, e.g. ``row_number() OVER (PARTITION BY k ORDER BY v DESC)``."""
     return df.withColumns({k: F.expr(v) for k, v in columns.items()})
 
 
@@ -101,13 +105,6 @@ def _aggregate(df: DataFrame, group_by: list[str], aggs: dict[str, str]) -> Data
     return df.agg(*exprs)
 
 
-@op("window")
-def _window(df: DataFrame, columns: dict[str, str]) -> DataFrame:
-    """Window exprs as full SQL strings, e.g.
-    ``row_number() OVER (PARTITION BY k ORDER BY v DESC)``."""
-    return df.withColumns({k: F.expr(v) for k, v in columns.items()})
-
-
 @op("distinct")
 def _distinct(df: DataFrame) -> DataFrame:
     return df.distinct()
@@ -116,14 +113,7 @@ def _distinct(df: DataFrame) -> DataFrame:
 @op("dedup")
 def _dedup(df: DataFrame, keys: list[str], order_by: list[str]) -> DataFrame:
     """Keep the first row per key under a total order (exact dedup)."""
-    from pyspark.sql import Window as W
-
-    w = W.partitionBy(*keys).orderBy(*_sort_cols(order_by))
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
+    return _topk_per_group(df, keys, order_by, k=1)
 
 
 @op("union")
@@ -225,80 +215,83 @@ class ValidationError(RuntimeError):
     failing check (not just the first)."""
 
 
-def _check_aggs(checks: list[dict[str, Any]], allow_distinct: bool = True) -> list:
-    aggs: list = [F.count(F.lit(1)).alias("__n")]
-    for i, c in enumerate(checks):
+def _rows(cond: Column) -> Column:
+    return F.sum(F.when(cond, 1).otherwise(0))
+
+
+def _nonzero(alias: str, agg: Column, label: str, what: str) -> tuple:
+    return alias, agg, lambda bad: f"{label}: {bad} {what}" if bad else None
+
+
+def _row_count(c: dict[str, Any], i: int) -> list[tuple]:
+    lo, hi = c.get("min"), c.get("max")
+    return [
+        ("__n", None,
+         lambda n: f"row_count: {n} < min {lo}" if lo is not None and n < lo else None),
+        ("__n", None,
+         lambda n: f"row_count: {n} > max {hi}" if hi is not None and n > hi else None),
+    ]
+
+
+# The validation-check table: type -> (keys a check needs, whether it
+# needs a distinct aggregate, which observe() forbids, counters).
+# counters(check, i) lists (metric alias, aggregate, verdict) triples:
+# the aggregate is computed under the alias (None: the row count "__n"
+# every check pass computes), and verdict(metric value) is a failure
+# message or None. Failure messages come in check order.
+CHECKS: dict[str, tuple[frozenset[str], bool, Callable[[dict, int], list[tuple]]]] = {
+    "row_count": (frozenset(), False, _row_count),
+    "not_null": (frozenset({"columns"}), False, lambda c, i: [
+        _nonzero(f"__{i}_null_{col}", _rows(F.col(col).isNull()), f"not_null({col})", "null rows")
+        for col in c["columns"]
+    ]),
+    "unique": (frozenset({"columns"}), True, lambda c, i: [_nonzero(
+        f"__{i}_dupes",
+        F.count(F.lit(1)) - F.countDistinct(F.struct(*[F.col(x) for x in c["columns"]])),
+        f"unique({','.join(c['columns'])})", "duplicate rows",
+    )]),
+    "accepted_values": (frozenset({"column", "values"}), False, lambda c, i: [_nonzero(
+        f"__{i}_rejected",
+        _rows(F.col(c["column"]).isNotNull() & ~F.col(c["column"]).isin(*c["values"])),
+        f"accepted_values({c['column']})", f"rows outside {c['values']}",
+    )]),
+    "expression": (frozenset({"expr"}), False, lambda c, i: [_nonzero(
+        f"__{i}_violations", _rows(~F.expr(c["expr"])),
+        f"expression({c['expr']})", "violating rows",
+    )]),
+}
+
+
+def _validate_checks(checks: list[dict[str, Any]], allow_distinct: bool = True) -> None:
+    """Check validation checks against ``CHECKS`` (pure dict work)."""
+    for c in checks:
         t = c.get("type")
-        if t == "row_count":
-            pass  # uses __n
-        elif t == "not_null":
-            for col in c["columns"]:
-                aggs.append(
-                    F.sum(F.when(F.col(col).isNull(), 1).otherwise(0)).alias(
-                        f"__{i}_null_{col}"
-                    )
-                )
-        elif t == "unique":
-            if not allow_distinct:
-                raise ValueError(
-                    "'unique' checks need a distinct aggregate, which "
-                    "observe() metrics forbid — use an eager validate step"
-                )
-            aggs.append(
-                (
-                    F.count(F.lit(1))
-                    - F.countDistinct(F.struct(*[F.col(x) for x in c["columns"]]))
-                ).alias(f"__{i}_dupes")
-            )
-        elif t == "accepted_values":
-            col = F.col(c["column"])
-            aggs.append(
-                F.sum(
-                    F.when(col.isNotNull() & ~col.isin(*c["values"]), 1).otherwise(0)
-                ).alias(f"__{i}_rejected")
-            )
-        elif t == "expression":
-            aggs.append(
-                F.sum(F.when(~F.expr(c["expr"]), 1).otherwise(0)).alias(
-                    f"__{i}_violations"
-                )
-            )
-        else:
+        if t not in CHECKS:
             raise ValueError(f"unknown validation check type {t!r}")
-    return aggs
+        need, distinct, _ = CHECKS[t]
+        if distinct and not allow_distinct:
+            raise ValueError(
+                f"{t!r} checks need a distinct aggregate, which "
+                "observe() metrics forbid — use an eager validate step"
+            )
+        missing = need - set(c)
+        if missing:
+            raise ValueError(f"{t} check missing {sorted(missing)}")
 
 
-def _check_failures(row: dict[str, Any], checks: list[dict[str, Any]]) -> list[str]:
-    failures: list[str] = []
-    n = row["__n"]
-    for i, c in enumerate(checks):
-        t = c["type"]
-        if t == "row_count":
-            lo, hi = c.get("min"), c.get("max")
-            if lo is not None and n < lo:
-                failures.append(f"row_count: {n} < min {lo}")
-            if hi is not None and n > hi:
-                failures.append(f"row_count: {n} > max {hi}")
-        elif t == "not_null":
-            for col in c["columns"]:
-                bad = row[f"__{i}_null_{col}"] or 0
-                if bad:
-                    failures.append(f"not_null({col}): {bad} null rows")
-        elif t == "unique":
-            bad = row[f"__{i}_dupes"] or 0
-            if bad:
-                failures.append(f"unique({','.join(c['columns'])}): {bad} duplicate rows")
-        elif t == "accepted_values":
-            bad = row[f"__{i}_rejected"] or 0
-            if bad:
-                failures.append(
-                    f"accepted_values({c['column']}): {bad} rows outside {c['values']}"
-                )
-        elif t == "expression":
-            bad = row[f"__{i}_violations"] or 0
-            if bad:
-                failures.append(f"expression({c['expr']}): {bad} violating rows")
-    return failures
+def _counters(checks: list[dict[str, Any]], allow_distinct: bool = True) -> list[tuple]:
+    _validate_checks(checks, allow_distinct)
+    return [k for i, c in enumerate(checks) for k in CHECKS[c["type"]][2](c, i)]
+
+
+def _check_aggs(counters: list[tuple]) -> list[Column]:
+    aggs = [agg.alias(alias) for alias, agg, _ in counters if agg is not None]
+    return [F.count(F.lit(1)).alias("__n"), *aggs]
+
+
+def _check_failures(row: dict[str, Any], counters: list[tuple]) -> list[str]:
+    verdicts = (verdict(row[alias]) for alias, _, verdict in counters)
+    return [msg for msg in verdicts if msg]
 
 
 @op("validate")
@@ -329,9 +322,10 @@ def _validate_step(df: DataFrame, checks: list[dict[str, Any]]) -> DataFrame:
     the same checks on the *sink* spec as ``"validate": [...]``
     (observe()-based; no 'unique' — distinct aggs can't ride observe).
     """
+    counters = _counters(checks)
     # bounded: global agg, exactly one row crosses to the driver
-    row = df.agg(*_check_aggs(checks)).collect()[0].asDict()
-    failures = _check_failures(row, checks)
+    row = df.agg(*_check_aggs(counters)).collect()[0].asDict()
+    failures = _check_failures(row, counters)
     if failures:
         raise ValidationError("; ".join(failures))
     return df
@@ -416,6 +410,11 @@ class Pipeline:
         return rows
 
     def _validate(self) -> None:
+        """Check the whole spec before anything runs: relation names,
+        ops, every source and sink against ``readers.FORMATS`` and every
+        validation check against ``CHECKS``. Pure dict work."""
+        for src in self.spec.get("sources", {}).values():
+            check_spec(src, "source")
         known = set(self.spec.get("sources", {}))
         for i, step in enumerate(self.spec.get("steps", [])):
             if "name" not in step:
@@ -435,6 +434,8 @@ class Pipeline:
                 right = step.get("args", {}).get("right")
                 if right is not None and right not in known:
                     raise ValueError(f"step {step['name']!r}: unknown right {right!r}")
+                if step["op"] == "validate":
+                    _validate_checks(step.get("args", {}).get("checks") or [])
             else:
                 raise ValueError(f"step {step['name']!r} needs 'sql' or 'op'")
             known.add(step["name"])
@@ -446,6 +447,8 @@ class Pipeline:
                     "view sinks run no action, so observe()-based sink "
                     "validation never fires — use a 'validate' step instead"
                 )
+            check_spec(sink, "sink")
+            _validate_checks(sink.get("validate") or [], allow_distinct=False)
 
     def _reread_after(self, i: int) -> bool:
         """Whether an action after validate step ``i`` reads the step's
@@ -515,13 +518,14 @@ class Pipeline:
                     from pyspark.sql import Observation
 
                     obs = Observation(f"validate_{sink['input']}")
-                    df = df.observe(obs, *_check_aggs(checks, allow_distinct=False))
+                    counters = _counters(checks, allow_distinct=False)
+                    df = df.observe(obs, *_check_aggs(counters))
                 write_sink(
                     df,
                     {k: v for k, v in sink.items() if k not in ("input", "validate")},
                 )
                 if obs is not None:
-                    failures = _check_failures(obs.get, checks)
+                    failures = _check_failures(obs.get, counters)
                     if failures:
                         raise ValidationError(
                             f"sink {sink['input']!r}: " + "; ".join(failures)

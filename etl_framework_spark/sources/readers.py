@@ -4,11 +4,17 @@ The reference family declares sources/sinks in job configs (CSV/JSON
 files, JDBC, Hive) and delegates IO to Spark's DataSource API; this is
 the same surface as spec dicts:
 
-    {"format": "parquet"|"csv"|"json"|"orc"|"jdbc"|"table"|"kafka"|"docstore",
-     "path"|"url"|"name": ...,
-     "schema": "a INT, b STRING",   # optional DDL (schema-on-read)
-     "options": {...},              # passed through to the reader
-     "stream": true}                # readStream instead of read
+    {"format": "parquet"|"csv"|"json"|"orc"|"docstore"|"jdbc"|"table"
+               |"kafka"|"view",      # view: sinks only
+     "path"|"url"+"dbtable"|"name"|...: ...,   # keys per FORMATS
+     "schema": "a INT, b STRING",   # optional DDL: file formats, kafka
+     "options": {...},              # passed through to the DataSource
+     "stream": true}                # readStream: file formats (kafka
+                                    # streams unless "stream": false)
+
+``Pipeline`` checks every source and sink against ``FORMATS`` when a
+job compiles (``check_spec``), so a malformed spec fails before
+anything is read or written.
 
 JDBC is tested against the embedded Derby engine Spark ships in its
 jars (in-JVM, no network): tests/test_jdbc.py round-trips a table
@@ -29,7 +35,19 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-_FILE_FORMATS = {"parquet", "csv", "json", "orc"}
+_FILE_FORMATS = ("parquet", "csv", "json", "orc")
+
+# The source/sink format table: format -> {role: keys a spec in that
+# role must carry}; a format without a role cannot play it. Every
+# format but kafka and table reads and writes through one generic
+# DataSource call (see _datasource).
+FORMATS: dict[str, dict[str, set[str]]] = {
+    **{f: {"source": {"path"}, "sink": {"path"}} for f in (*_FILE_FORMATS, "docstore")},
+    "jdbc": {"source": {"url", "dbtable"}, "sink": {"url", "dbtable"}},
+    "table": {"source": {"name"}, "sink": {"name"}},
+    "kafka": {"source": {"bootstrap_servers"}, "sink": {"bootstrap_servers", "topic"}},
+    "view": {"sink": {"name"}},
+}
 
 # ---------------------------------------------------------------------------
 # Parquet schema memo.
@@ -258,31 +276,51 @@ def encode_kafka_value(df: DataFrame, key: str | None = None) -> DataFrame:
     return out
 
 
-def read_source(spark: SparkSession, spec: dict[str, Any]) -> DataFrame:
+def check_spec(spec: dict[str, Any], role: str) -> None:
+    """Check a source (``role="source"``) or sink (``role="sink"``) spec
+    against ``FORMATS``. Pure dict work: ``Pipeline`` runs it over every
+    spec before anything runs."""
+    fmt = spec.get("format", "parquet")
+    need = FORMATS.get(fmt, {}).get(role)
+    if need is None:
+        raise ValueError(f"unsupported {role} format {fmt!r}")
+    missing = need - set(spec)
+    if missing:
+        raise ValueError(f"{fmt} {role} missing {sorted(missing)}")
+
+
+def _datasource(
+    spark: SparkSession, spec: dict[str, Any]
+) -> tuple[dict[str, Any], str | None]:
+    """Options and path of a generic DataSource read or write:
+    jdbc's url/dbtable become options the user's ``options`` override,
+    csv defaults to a header row, and docstore registers its Python
+    DataSource with the session."""
     fmt = spec.get("format", "parquet")
     options = dict(spec.get("options", {}))
     if fmt == "jdbc":
-        required = {"url", "dbtable"}
-        missing = required - set(spec)
-        if missing:
-            raise ValueError(f"jdbc source missing {sorted(missing)}")
-        reader = spark.read.format("jdbc").option("url", spec["url"]).option(
-            "dbtable", spec["dbtable"]
-        )
-        for k, v in options.items():
-            reader = reader.option(k, v)
-        return reader.load()
+        return {"url": spec["url"], "dbtable": spec["dbtable"], **options}, None
+    if fmt == "csv":
+        options = {"header": True, **options}
+    if fmt == "docstore":  # custom Python DataSource connector
+        from etl_framework_spark.sources.docstore import register
+
+        register(spark)
+    return options, spec["path"]
+
+
+def read_source(spark: SparkSession, spec: dict[str, Any]) -> DataFrame:
+    check_spec(spec, "source")
+    fmt = spec.get("format", "parquet")
     if fmt == "table":  # catalog/metastore-backed (Hive-style) source
         # The reference family reads Hive tables by name from job
         # configs; here the session catalog (in-memory or Hive
         # metastore, whatever the session was built with) resolves the
         # name. Partition pruning/stats come from the catalog entry —
         # at cluster scale this is the path that sees Hive partitions.
-        if "name" not in spec:
-            raise ValueError("table source needs 'name'")
         if not spark.catalog.tableExists(spec["name"]):
             raise ValueError(f"table source: {spec['name']!r} not in catalog")
-        return spark.read.options(**options).table(spec["name"])
+        return spark.read.options(**dict(spec.get("options", {}))).table(spec["name"])
     if fmt == "kafka":
         opts = kafka_source_options(spec)
         reader = (
@@ -307,62 +345,25 @@ def read_source(spark: SparkSession, spec: dict[str, Any]) -> DataFrame:
                 value_format=spec.get("value_format", default_fmt),
             )
         return df
-    if fmt == "docstore":  # custom Python DataSource connector
-        from etl_framework_spark.sources.docstore import register
-
-        register(spark)
-        return (
-            spark.read.format("docstore")
-            .options(**options)
-            .option("path", spec["path"])
-            .load()
-        )
-    if fmt not in _FILE_FORMATS:
-        raise ValueError(f"unsupported source format {fmt!r}")
-    if "path" not in spec:
-        raise ValueError(f"{fmt} source needs 'path'")
-    if fmt == "parquet" and not spec.get("stream") and not spec.get("schema"):
-        return read_parquet(spark, spec["path"], options)
-    reader = spark.readStream if spec.get("stream") else spark.read
-    if spec.get("schema"):
-        reader = reader.schema(spec["schema"])
-    elif fmt == "csv" and not spec.get("stream"):
-        options.setdefault("inferSchema", True)
-    if fmt == "csv":
-        options.setdefault("header", True)
-    for k, v in options.items():
-        reader = reader.option(k, v)
-    return getattr(reader, fmt)(spec["path"])
+    options, path = _datasource(spark, spec)
+    # stream and schema apply to the file formats only
+    files = fmt in _FILE_FORMATS
+    stream, schema = files and spec.get("stream"), files and spec.get("schema")
+    if fmt == "parquet" and not stream and not schema:
+        return read_parquet(spark, path, options)
+    if fmt == "csv" and not stream and not schema:
+        options = {"inferSchema": True, **options}
+    reader = (spark.readStream if stream else spark.read).format(fmt)
+    if schema:
+        reader = reader.schema(schema)
+    return reader.options(**options).load(path)
 
 
 def write_sink(df: DataFrame, spec: dict[str, Any]) -> None:
+    check_spec(spec, "sink")
     fmt = spec.get("format", "parquet")
     if fmt == "view":  # in-memory sink: register for downstream consumers
         df.createOrReplaceTempView(spec["name"])
-        return
-    if fmt == "table":  # catalog-managed (saveAsTable) sink — the
-        # write half of the {"format": "table"} source above
-        writer = df.write.mode(spec.get("mode", "overwrite"))
-        if spec.get("partition_by"):
-            writer = writer.partitionBy(*spec["partition_by"])
-        for k, v in dict(spec.get("options", {})).items():
-            writer = writer.option(k, v)
-        writer.saveAsTable(spec["name"])
-        return
-    if fmt == "jdbc":
-        required = {"url", "dbtable"}
-        missing = required - set(spec)
-        if missing:
-            raise ValueError(f"jdbc sink missing {sorted(missing)}")
-        writer = (
-            df.write.format("jdbc")
-            .mode(spec.get("mode", "overwrite"))
-            .option("url", spec["url"])
-            .option("dbtable", spec["dbtable"])
-        )
-        for k, v in dict(spec.get("options", {})).items():
-            writer = writer.option(k, v)
-        writer.save()
         return
     if fmt == "kafka":
         opts = kafka_sink_options(spec)
@@ -376,21 +377,7 @@ def write_sink(df: DataFrame, spec: dict[str, Any]) -> None:
                 f"{e}"
             ) from e
         return
-    if fmt == "docstore":
-        from etl_framework_spark.sources.docstore import register
-
-        register(df.sparkSession)
-        (
-            df.write.format("docstore")
-            .mode(spec.get("mode", "overwrite"))
-            .options(**dict(spec.get("options", {})))
-            .option("path", spec["path"])
-            .save()
-        )
-        return
-    if fmt not in _FILE_FORMATS:
-        raise ValueError(f"unsupported sink format {fmt!r}")
-    if spec.get("cluster_by"):
+    if fmt in _FILE_FORMATS and spec.get("cluster_by"):
         # Global clustering on write: range-repartition so each output
         # task owns a disjoint key range, then sort locally — file and
         # row-group min/max stats become tight AND non-overlapping, so
@@ -403,17 +390,17 @@ def write_sink(df: DataFrame, spec: dict[str, Any]) -> None:
             if n
             else df.repartitionByRange(*cols)
         ).sortWithinPartitions(*cols)
-    elif spec.get("sort_by"):
+    elif fmt in _FILE_FORMATS and spec.get("sort_by"):
         # Local-only clustering: sort within existing partitions so
         # row-group min/max stats are tight (no extra shuffle). Use
         # when the upstream partitioning already groups the key.
         df = df.sortWithinPartitions(*spec["sort_by"])
     writer = df.write.mode(spec.get("mode", "overwrite"))
-    if spec.get("partition_by"):
+    if spec.get("partition_by") and (fmt in _FILE_FORMATS or fmt == "table"):
         writer = writer.partitionBy(*spec["partition_by"])
-    options = dict(spec.get("options", {}))
-    if fmt == "csv":
-        options.setdefault("header", True)  # symmetric with the reader default
-    for k, v in options.items():
-        writer = writer.option(k, v)
-    getattr(writer, fmt)(spec["path"])
+    if fmt == "table":  # catalog-managed (saveAsTable) sink — the
+        # write half of the {"format": "table"} source above
+        writer.options(**dict(spec.get("options", {}))).saveAsTable(spec["name"])
+        return
+    options, path = _datasource(df.sparkSession, spec)
+    writer.format(fmt).options(**options).save(path)

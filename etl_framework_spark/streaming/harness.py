@@ -12,47 +12,14 @@ import uuid
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-# events.ts physical type varies by testdata generation: TIMESTAMP(NANOS)
-# (which Spark must read as epoch-long via nanosAsLong) or plain µs
-# timestamps. Detect from the parquet footer and mirror catalog.table.
-_EVENTS_SCHEMA_NS = (
-    "event_id bigint, ts bigint, user_id bigint, event_type string, "
-    "value double, props string"
-)
-_EVENTS_SCHEMA_US = (
-    "event_id bigint, ts timestamp, user_id bigint, event_type string, "
-    "value double, props string"
-)
-
-
-def _ts_is_nanos(sf_dir: str) -> bool:
-    import pyarrow.parquet as pq
-
-    return str(pq.read_schema(f"{sf_dir}/events.parquet").field("ts").type).endswith(
-        "[ns]"
-    )
+from etl_framework_spark.catalog import events
 
 
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """readStream over the events parquet with the µs-timestamp
     conversion applied — the streaming twin of catalog.table."""
-    # The file stream source requires a directory or glob (a bare file
-    # path fails with "Option 'basePath' must be a directory").
-    if _ts_is_nanos(sf_dir):
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        raw = (
-            spark.readStream.schema(_EVENTS_SCHEMA_NS)
-            .format("parquet")
-            .load(f"{sf_dir}/events.*")
-        )
-        return raw.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
-    return (
-        spark.readStream.schema(_EVENTS_SCHEMA_US)
-        .format("parquet")
-        .load(f"{sf_dir}/events.*")
-    )
+    return events(spark, sf_dir, stream=True)
 
 
 def replay_events(

@@ -41,6 +41,46 @@ def test_spec_validation_unknown_sink_input():
         Pipeline({"sources": {}, "steps": [], "sinks": [{"input": "nope", "path": "/x"}]})
 
 
+_ORDERS_SRC = {"format": "parquet", "path": f"{SF_SMALL}/orders.parquet"}
+_FIRST_SINK = {"input": "orders", "format": "parquet", "path": "first"}
+
+
+@pytest.mark.parametrize(
+    "source, second_sink, match",
+    [
+        (_ORDERS_SRC, {"input": "orders", "format": "parquet"}, r"parquet sink missing \['path'\]"),
+        ({**_ORDERS_SRC, "format": "parqet"}, None, "unsupported source format 'parqet'"),
+        (_ORDERS_SRC, {"input": "orders", "format": "view"}, r"view sink missing \['name'\]"),
+        (_ORDERS_SRC, {"input": "orders", "format": "jdbc", "url": "jdbc:x"}, "jdbc sink missing"),
+        (
+            _ORDERS_SRC,
+            {"input": "orders", "path": "second", "validate": [{"type": "nope"}]},
+            "unknown validation check type 'nope'",
+        ),
+        (
+            _ORDERS_SRC,
+            {"input": "orders", "path": "second",
+             "validate": [{"type": "unique", "columns": ["o_orderkey"]}]},
+            "'unique' checks need a distinct aggregate",
+        ),
+    ],
+    ids=["sink_no_path", "source_misspelled", "view_no_name", "jdbc_no_dbtable",
+         "unknown_check", "unique_on_sink"],
+)
+def test_malformed_spec_rejected_before_anything_runs(spark, tmp_path, source, second_sink, match):
+    """Every source, sink and check is checked when the spec compiles:
+    a malformed one raises ValueError from Pipeline(spec), so a run
+    never writes the sinks before it."""
+    sinks = [_FIRST_SINK] + ([second_sink] if second_sink else [])
+    sinks = [{**s, "path": str(tmp_path / s["path"])} if "path" in s else s for s in sinks]
+    spec = {"sources": {"orders": source}, "steps": [], "sinks": sinks}
+    with pytest.raises(ValueError, match=match):
+        Pipeline(spec)
+    with pytest.raises(ValueError, match=match):
+        run_pipeline(spark, spec)
+    assert not (tmp_path / "first").exists()
+
+
 def test_pipeline_join_and_sql_steps(spark):
     """Multi-source pipeline: op-join + SQL step + view sink."""
     spec = {
@@ -330,6 +370,37 @@ def test_validation_step_reports_every_failure(spark):
         )
     msg = str(exc.value)
     assert "row_count" in msg and "unique" in msg and "expression" in msg
+
+
+def test_validation_failures_listed_in_check_order(spark, tmp_path):
+    """Failure messages keep the order of the declared checks (and of
+    the columns inside one check), whatever order the check types
+    have among themselves."""
+    from etl_framework_spark.pipeline import ValidationError
+
+    path = str(tmp_path / "t")
+    spark.createDataFrame(
+        [(1, None, None, -1.0), (2, None, "x", -2.0), (3, "y", "z", 5.0)],
+        "k INT, a STRING, b STRING, v DOUBLE",
+    ).write.parquet(path)
+    checks = [
+        {"type": "not_null", "columns": ["b", "a"]},
+        {"type": "expression", "expr": "v > 0"},
+        {"type": "row_count", "min": 5},
+    ]
+    with pytest.raises(ValidationError) as exc:
+        run_pipeline(
+            spark,
+            {
+                "sources": {"t": {"format": "parquet", "path": path}},
+                "steps": [{"name": "v", "input": "t", "op": "validate",
+                           "args": {"checks": checks}}],
+            },
+        )
+    assert str(exc.value) == (
+        "not_null(b): 1 null rows; not_null(a): 2 null rows; "
+        "expression(v > 0): 2 violating rows; row_count: 3 < min 5"
+    )
 
 
 def test_sink_observe_validation_zero_extra_scan(spark, tmp_path):

@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
+from etl_framework_spark.session import collect_at_most
 
 _CC_COLLECT_CAP = 2_000_000  # distinct directed edge rows; ~32 MB of
 # two int64 columns via Arrow plus the union-find maps — the driver
@@ -63,7 +64,10 @@ def connected_components(
     edges: DataFrame, src: str = "src", dst: str = "dst", max_iter: int = 20
 ) -> DataFrame:
     """(node, component) for every node in `edges`; component = min
-    node id reachable. Undirected; self-loops implied."""
+    node id reachable. Undirected; self-loops implied. Edges with a
+    NULL endpoint are dropped first, on both paths below, so a node
+    that only appears on such edges is not in the output."""
+    ab = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).dropna()
     # r12 (guide §1.2): the fixpoint costs one join+agg+checkpoint
     # round per label-propagation step (O(diameter) serialized Spark
     # jobs) even when the DISTINCT edge list is tiny next to its
@@ -73,12 +77,8 @@ def connected_components(
     # llm_dedup_cc, median-of-3: 9.34 → 3.20 s, value-identical.
     # Above the cap the distributed fixpoint below is unchanged — the
     # correct shape when the edge list genuinely exceeds one task.
-    head = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .limit(_CC_COLLECT_CAP + 1)
-        .toArrow()
-    )
-    if head.num_rows <= _CC_COLLECT_CAP:
+    head = collect_at_most(ab, _CC_COLLECT_CAP)
+    if head is not None:
         rows = _uf_components(
             head.column("a").to_pylist(), head.column("b").to_pylist()
         )
@@ -89,8 +89,7 @@ def connected_components(
     # its lineage (e.g. md5 MinHash signatures upstream) would be
     # recomputed per round otherwise — measured 29s → ~8s at sf0.1
     sym = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
+        ab.union(ab.select(F.col("b").alias("a"), F.col("a").alias("b")))
         .distinct()
         .localCheckpoint(eager=True)
     )

@@ -32,10 +32,15 @@ HALF_UP-vs-floor(+0.5) sign asymmetry never reaches the fast path:
 fast() handles negatives by rounding the magnitude (half AWAY from
 zero, same as HALF_UP).
 
+Every row whose y is not finite also takes the exact path: ±Inf
+inputs, and finite |x| >= ~1.8e308 / 10^s, where |x|*10^s overflows
+(1e303 at scale 6) and fast() would return ±Inf where `F.round`
+returns x.
+
 Contract: input values must be non-null AND non-NaN — pandas uses NaN
 as the null sentinel, so either would surface as NULL after the
-kernel. ±Inf fast-paths as itself. Every current caller satisfies
-this (non-null TPC-H numerics through total libm functions).
+kernel. Every current caller satisfies this (non-null TPC-H numerics
+through total libm functions).
 """
 from __future__ import annotations
 
@@ -70,8 +75,8 @@ def hybrid_round_select(
                 x = pdf[f"__r_{n}"].to_numpy()
                 m = float(10**s)
                 y = np.abs(x) * m
-                out[f"__g_{n}"] = np.abs(y - np.floor(y) - 0.5) <= (
-                    1e-9 + y * 1e-15
+                out[f"__g_{n}"] = ~np.isfinite(y) | (
+                    np.abs(y - np.floor(y) - 0.5) <= 1e-9 + y * 1e-15
                 )
                 out[n] = np.sign(x) * np.floor(y + 0.5) / m
                 out[f"__r_{n}"] = x

@@ -13,12 +13,13 @@ the O(n·m) scan into bucket-local joins.
 
 from __future__ import annotations
 
-import hashlib
 import os
 
 import numpy as np
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+
+from etl_framework_spark.session import collect_at_most
 
 
 def dot_fold(a: Column, b: Column) -> Column:
@@ -86,12 +87,6 @@ def lsh_buckets(vec: Column, planes: np.ndarray) -> Column:
         bit = (dot_fold(vec, plane) > 0).cast("int")
         bucket = bucket + bit * (1 << p)
     return bucket
-
-
-def stable_seed(tag: str) -> int:
-    """md5-derived integer seed — stable across processes/partitions
-    (never Python's salted hash(); SURVEY.md §7 'MinHash determinism')."""
-    return int(hashlib.md5(tag.encode()).hexdigest()[:8], 16)
 
 
 def blocked_cosine_pairs(df, block_col: str, tau: float):
@@ -230,22 +225,22 @@ def anchor_knn(cand_df, anchor_df, k: int, quant: float,
     """
     import pandas as pd
 
-    rows = anchor_df.select(id_col, vec_col).limit(_MAX_ANCHOR_COLLECT + 1).collect()
-    if len(rows) > _MAX_ANCHOR_COLLECT:
+    anchors = collect_at_most(anchor_df.select(id_col, vec_col), _MAX_ANCHOR_COLLECT)
+    if anchors is None:
         raise ValueError(
             f"anchor_knn: anchor set exceeds {_MAX_ANCHOR_COLLECT}; "
             "grow the sampling modulus so the anchor count stays fixed "
             "(callers pin the modulus statically so their SQL oracle "
             "matches — see the SF-ceiling note at each call site)"
         )
-    if not rows:
+    if not anchors.num_rows:
         raise ValueError(
             "anchor_knn: anchor set is empty — the sampling predicate "
             "matched no rows (ADVICE r6: an empty anchor matrix would "
             "otherwise die in an opaque numpy unpack)"
         )
-    ids = np.array([r[0] for r in rows], dtype=np.int64)
-    A = np.array([r[1] for r in rows], dtype=np.float64)  # (M, D)
+    ids = np.array(anchors.column(0).to_pylist(), dtype=np.int64)
+    A = np.array(anchors.column(1).to_pylist(), dtype=np.float64)  # (M, D)
     m, dims = A.shape
     sentinel = np.iinfo(np.int64).max
 

@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
+from etl_framework_spark.session import collect_at_most, prep
 from etl_framework_spark.cacheutil import persist_tracked
 
 _K_HOPS = 4
@@ -135,8 +135,8 @@ def graph_khop_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     # value-identical. Above the cap (8M distinct edges ≈ 128 MB) the
     # distributed frontier-join loop below is the correct shape and
     # unchanged.
-    head = fwd.limit(_KHOP_COLLECT_CAP + 1).toArrow()
-    if head.num_rows <= _KHOP_COLLECT_CAP:
+    head = collect_at_most(fwd, _KHOP_COLLECT_CAP)
+    if head is not None:
         out_rows = _khop_bfs_in_process(
             head.column("src").to_numpy(zero_copy_only=False),
             head.column("dst").to_numpy(zero_copy_only=False),

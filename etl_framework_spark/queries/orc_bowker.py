@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 
 from etl_framework_spark.catalog import table
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
+from etl_framework_spark.session import collect_at_most, prep
 
 
 # --------------------------------------------------------------------------
@@ -256,21 +256,21 @@ def vec_nearest_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    rows = carr.limit(_NC_MAX_CENTROIDS + 1).collect()
-    if len(rows) > _NC_MAX_CENTROIDS:
+    cents = collect_at_most(carr, _NC_MAX_CENTROIDS)
+    if cents is None:
         raise ValueError(
             "vec_nearest_centroid: centroid count exceeds "
             f"{_NC_MAX_CENTROIDS} — the key%100 label encoding (shared "
             "with the oracle) only supports 2-digit labels; widen both "
             "together"
         )
-    if not rows:
+    if not cents.num_rows:
         raise ValueError(
             "vec_nearest_centroid: no centroids — embeddings table is "
             "empty"
         )
-    labels_arr = np.array([r["clabel"] for r in rows], dtype=np.int64)
-    C = np.array([r["cv"] for r in rows], dtype=np.float64)  # (L, D)
+    labels_arr = np.array(cents.column("clabel").to_pylist(), dtype=np.int64)
+    C = np.array(cents.column("cv").to_pylist(), dtype=np.float64)  # (L, D)
 
     def gen(it):
         for pdf in it:

@@ -358,21 +358,13 @@ def vec_matryoshka(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = table(spark, sf_dir, "embeddings")
     from etl_framework_spark.queries import vector_q
 
-    q_rows = (
-        emb.filter(F.col("vec_id") % _QUERY_MOD == 0)
-        .select("vec_id", "embedding")
-        .limit(vector_q._MAX_Q_COLLECT + 1)
-        .collect()
+    qids, Q = vector_q.query_set(
+        emb,
+        F.col("vec_id") % _QUERY_MOD == 0,
+        "vec_matryoshka",
+        "shard the query set (one corpus pass per shard) instead of "
+        "widening the driver collect",
     )
-    if len(q_rows) > vector_q._MAX_Q_COLLECT:
-        raise ValueError(
-            f"vec_matryoshka: query set exceeds _MAX_Q_COLLECT="
-            f"{vector_q._MAX_Q_COLLECT} rows; shard the query set "
-            "(one corpus pass per shard) instead of widening the "
-            "driver collect"
-        )
-    qids = np.array([r.vec_id for r in q_rows], dtype=np.int64)
-    Q = np.array([r.embedding for r in q_rows], dtype=np.float64)
     td = _MATRYOSHKA_DIMS
 
     def norms_strict(M):

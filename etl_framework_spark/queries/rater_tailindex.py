@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 from etl_framework_spark.catalog import table
 from etl_framework_spark.operators.graph import co_occurrence_pairs
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
+from etl_framework_spark.session import collect_at_most, prep
 from etl_framework_spark.cacheutil import persist_tracked
 
 _HILL_K = 100
@@ -287,14 +287,9 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Alternating A/B at sf0.1: wins every pair, 13.19 → 9.64 s
     # medians on a loaded box (~0.9 s on quiet runs). Above the cap,
     # the distributed shape below is unchanged.
-    edge_rows = (
-        w0.crossJoin(F.broadcast(thr))
-        .filter(F.col("c") > F.col("t"))
-        .select("u", "v")
-        .limit(_ASSORT_COLLECT_CAP + 1)
-        .toArrow()
-    )
-    if edge_rows.num_rows <= _ASSORT_COLLECT_CAP:
+    top = w0.crossJoin(F.broadcast(thr)).filter(F.col("c") > F.col("t"))
+    edge_rows = collect_at_most(top.select("u", "v"), _ASSORT_COLLECT_CAP)
+    if edge_rows is not None:
         w0.unpersist()
         us = edge_rows.column("u").to_pylist()
         vs = edge_rows.column("v").to_pylist()
@@ -338,13 +333,7 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             F.round(r0, 6).alias("assortativity"),
         )
-    w = (
-        w0.crossJoin(F.broadcast(thr))
-        .filter(F.col("c") > F.col("t"))
-        .select("u", "v")
-        .coalesce(1)
-        .localCheckpoint()
-    )
+    w = top.select("u", "v").coalesce(1).localCheckpoint()
     w0.unpersist()
     deg = (
         w.select(F.col("u").alias("n"))

@@ -26,7 +26,7 @@ from etl_framework_spark.operators.similarity import (
     random_hyperplanes,
 )
 from etl_framework_spark.registry import query
-from etl_framework_spark.session import prep
+from etl_framework_spark.session import collect_at_most, prep
 
 TOPK = 10
 QUERY_MOD = 10  # vec_id % QUERY_MOD == 0 rows act as the query set
@@ -39,8 +39,37 @@ NEARDUP_TAU = 0.3
 # normal driver). Larger query sets must shard or go approximate.
 _MAX_Q_COLLECT = 1_000_000
 
+_SHARD_OR_ANN = (
+    "shard the query set (one corpus pass per shard) or use "
+    "llm_sim_ann/llm_sim_ivf."
+)
+
 _COS_QE = duck_cosine("q.qe", "e.embedding")
 _COS_AB = duck_cosine("a.embedding", "b.embedding")
+
+
+def query_set(
+    emb: DataFrame, query_pred, what: str, remedy: str = _SHARD_OR_ANN
+):
+    """``(qids, Q)`` of the ``emb`` rows matching ``query_pred``: int64
+    vec_ids and their float32 embeddings widened exactly to a float64
+    (n, dim) matrix. The set is collected to the driver under
+    _MAX_Q_COLLECT and raises ``"<what>: query set exceeds ...;
+    <remedy>"`` past it."""
+    import numpy as np
+
+    q = collect_at_most(
+        emb.filter(query_pred).select("vec_id", "embedding"), _MAX_Q_COLLECT
+    )
+    if q is None:
+        raise ValueError(
+            f"{what}: query set exceeds _MAX_Q_COLLECT={_MAX_Q_COLLECT} "
+            f"rows; {remedy}"
+        )
+    return (
+        np.array(q.column("vec_id").to_pylist(), dtype=np.int64),
+        np.array(q.column("embedding").to_pylist(), dtype=np.float64),
+    )
 
 
 # --------------------------------------------------------------------------
@@ -109,7 +138,7 @@ def exact_topk(
     k·partitions survivors. Replaced the per-pair JVM fold (3.4s →
     ~0.6s at sf0.1, same bits).
 
-    Driver-memory bound: the query SET (not the corpus) is collect()ed
+    Driver-memory bound: the query SET (not the corpus) is collected
     to the driver and broadcast, so this exact path holds only while
     |queries|·dim·8B fits driver memory — _MAX_Q_COLLECT guards that
     and fails loudly past it. At 100 TB the corpus side still streams
@@ -128,19 +157,7 @@ def exact_topk(
     emb = table(spark, sf_dir, "embeddings")
     if query_pred is None:
         query_pred = F.col("vec_id") % QUERY_MOD == 0
-    q_rows = (
-        emb.filter(query_pred)
-        .limit(_MAX_Q_COLLECT + 1)
-        .collect()
-    )
-    if len(q_rows) > _MAX_Q_COLLECT:
-        raise ValueError(
-            f"llm_sim_topk exact path: query set exceeds _MAX_Q_COLLECT="
-            f"{_MAX_Q_COLLECT} rows; shard the query set (one corpus pass "
-            "per shard) or use llm_sim_ann/llm_sim_ivf."
-        )
-    qids = np.array([r.vec_id for r in q_rows], dtype=np.int64)
-    Q = np.array([r.embedding for r in q_rows], dtype=np.float64)
+    qids, Q = query_set(emb, query_pred, "llm_sim_topk exact path")
     nq, dim = Q.shape
     qn_acc = np.zeros(nq)
     for d in range(dim):  # strict fold: ((0 + p1) + p2) + ... per query
@@ -271,21 +288,7 @@ def gemm_topk(
     emb = table(spark, sf_dir, "embeddings")
     if query_pred is None:
         query_pred = F.col("vec_id") % QUERY_MOD == 0
-    # same driver-memory guard as the exact twin (VERDICT r7 item 3:
-    # this collect was the one unguarded data-dependent collect).
-    q_rows = (
-        emb.filter(query_pred)
-        .limit(_MAX_Q_COLLECT + 1)
-        .collect()
-    )
-    if len(q_rows) > _MAX_Q_COLLECT:
-        raise ValueError(
-            f"llm_sim_topk_gemm: query set exceeds _MAX_Q_COLLECT="
-            f"{_MAX_Q_COLLECT} rows; shard the query set (one corpus pass "
-            "per shard) or use llm_sim_ann/llm_sim_ivf."
-        )
-    qids = np.array([r.vec_id for r in q_rows], dtype=np.int64)
-    Q = np.array([r.embedding for r in q_rows], dtype=np.float64)
+    qids, Q = query_set(emb, query_pred, "llm_sim_topk_gemm")
     Q /= np.linalg.norm(Q, axis=1, keepdims=True)
     b = spark.sparkContext.broadcast((qids, Q))
     k = TOPK
@@ -471,17 +474,13 @@ def sq8_topk(
             127,
         )
 
-    q_rows = (
-        emb.filter(query_pred).limit(_MAX_Q_COLLECT + 1).collect()
+    qids, Q = query_set(
+        emb,
+        query_pred,
+        "llm_sim_sq8",
+        "shard the query set or use llm_sim_ann/llm_sim_ivf.",
     )
-    if len(q_rows) > _MAX_Q_COLLECT:
-        raise ValueError(
-            f"llm_sim_sq8: query set exceeds _MAX_Q_COLLECT="
-            f"{_MAX_Q_COLLECT} rows; shard the query set or use "
-            "llm_sim_ann/llm_sim_ivf."
-        )
-    qids = np.array([r.vec_id for r in q_rows], dtype=np.int64)
-    Qc = _codes(np.array([r.embedding for r in q_rows], dtype=np.float64))
+    Qc = _codes(Q)
     b = spark.sparkContext.broadcast((qids, Qc, lo, scale))
     cand_k = 3 * TOPK
 

@@ -8,8 +8,12 @@ comparable with the DuckDB oracle (DuckDB timestamps are UTC-naive).
 from __future__ import annotations
 
 import os
+from typing import TYPE_CHECKING
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+
+if TYPE_CHECKING:
+    import pyarrow as pa
 
 _TUNED: set[int] = set()
 
@@ -29,6 +33,16 @@ def default_driver_mem() -> str:
         return env
     total_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
     return f"{max(1024, min(24 * 1024, total_mb // 4))}m"
+
+
+def collect_at_most(df: DataFrame, max_rows: int) -> pa.Table | None:
+    """``df`` as a ``pyarrow.Table`` on the driver if it has at most
+    ``max_rows`` rows, else None. The limit is part of the collected
+    plan, so no more than ``max_rows + 1`` rows ever cross to the
+    driver. Every capped driver collect in the package goes through
+    here."""
+    head = df.limit(max_rows + 1).toArrow()
+    return head if head.num_rows <= max_rows else None
 
 
 def get_spark(app_name: str = "etl-framework-spark") -> SparkSession:

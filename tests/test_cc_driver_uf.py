@@ -38,7 +38,10 @@ def test_uf_matches_brute_force(edges):
 
 def test_driver_and_distributed_paths_agree(spark, monkeypatch):
     edges = [(2, 1), (3, 2), (9, 8), (4, 3), (7, 9), (11, 11)]
-    df = spark.createDataFrame(edges, "src long, dst long")
+    # NULL-endpoint edges are dropped on both paths: 5 and 6 appear
+    # only on such edges, 3 also on a real one
+    nulls = [(3, None), (None, 5), (6, None), (None, None)]
+    df = spark.createDataFrame(edges + nulls, "src long, dst long")
     fast = {r.node: r.component for r in G.connected_components(df).collect()}
     # force the distributed fixpoint by shrinking the collect cap
     monkeypatch.setattr(G, "_CC_COLLECT_CAP", 0)

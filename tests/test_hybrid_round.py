@@ -17,6 +17,7 @@ ADVERSARIAL = [
     0.12345649999999999, 0.30000000000000004, 0.1 + 0.2,
     123456789.1234565, 4503599627.370495, 9007199254.740993,
     1e15 + 0.5, -1e15 - 0.5, 0.0, -0.0, 1e-300, 1e300,
+    1e303, -2e302,  # |x|*10^6 overflows to inf: must take the exact path
 ]
 
 
@@ -74,6 +75,7 @@ def test_inf_fast_path_and_nan_contract(spark):
     rows = {r.id: r.g for r in hybrid_round_select(
         df, ["id"], [("g", F.col("x"), 6)]).collect()}
     # documented contract: NaN is pandas' null sentinel -> NULL out;
-    # inputs are required to be non-null/non-NaN, +-Inf passes through
+    # inputs are required to be non-null/non-NaN, +-Inf takes the
+    # exact path and passes through
     assert rows[1] is None
     assert rows[2] == float("inf") and rows[3] == float("-inf")

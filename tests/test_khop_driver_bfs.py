@@ -7,10 +7,12 @@ the supplier/part side alternation."""
 import numpy as np
 import pytest
 
+import etl_framework_spark.queries.khop_sessions as ks
 from etl_framework_spark.queries.khop_sessions import (
     _khop_bfs_in_process,
     _K_HOPS,
 )
+from tests.conftest import SF_SMALL
 
 
 def _brute_levels(edges: list, seed: int) -> list[tuple]:
@@ -80,3 +82,13 @@ def test_min_level_semantics_on_diamond():
     got = _run(edges, 0)
     assert got == _brute_levels(edges, 0)
     assert got == [(0, 1, 0), (1, 0, 2), (2, 1, 0), (3, 0, 1)]
+
+
+def test_fallback_equals_in_process(spark, monkeypatch):
+    # real data: the collected BFS and the distributed frontier-join
+    # fallback (collect cap forced to 0) give the same levels
+    fast = sorted(map(tuple, ks.graph_khop_reach(spark, SF_SMALL).collect()))
+    monkeypatch.setattr(ks, "_KHOP_COLLECT_CAP", 0)
+    slow = sorted(map(tuple, ks.graph_khop_reach(spark, SF_SMALL).collect()))
+    assert fast == slow
+    assert fast[0] == (0, 1, 0) and len(fast) > 1
